@@ -72,19 +72,6 @@ def test_budget_prefix_property(spark):
     assert budget_prefix(df, "cost", budget=5.0).count() == 1
 
 
-def test_skinny_schedule_equals_full(spark):
-    """The skinny ranking path (narrow shuffle + join-back) is row-identical
-    to the single-pass plan, including pass-through extra columns."""
-    cands = _cands(spark, n=600, hosts=5).withColumn("attempts", F.col("url_hash") % 3)
-    a = schedule_round(cands, _policy(spark), "2025-06-01 00:00:00", salts=4, skinny=True)
-    b = schedule_round(cands, _policy(spark), "2025-06-01 00:00:00", salts=4, skinny=False)
-    assert sorted(a.columns) == sorted(b.columns)
-    cols = sorted(a.columns)
-    ra = sorted(tuple(r) for r in a.select(*cols).collect())
-    rb = sorted(tuple(r) for r in b.select(*cols).collect())
-    assert ra == rb
-
-
 def test_nan_delay_treated_as_unspecified(spark):
     """A float64-NaN crawl_delay_s (what pandas turns None into, and what a
     non-Arrow createDataFrame hands Spark verbatim) must behave exactly

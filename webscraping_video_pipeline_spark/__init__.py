@@ -6,7 +6,7 @@ capabilities of the reference scraping pipeline
 
 - ``schemas``     — explicit StructTypes for every engine table
 - ``synth``       — deterministic synthetic ``pages``/``seeds``/policy fixtures
-- ``catalog``     — Iceberg-or-parquet checkpointed storage with atomic rounds
+- ``catalog``     — parquet checkpointed storage with atomic rounds
 - ``functions``   — vectorized UDFs + column expressions (canonicalize, extract,
                     scalar parsers, text analysis, sketches)
 - ``operators``   — dedup (exact / Bloom / MinHash-LSH / SimHash), politeness

@@ -56,7 +56,6 @@ def schedule_round(
     default_capacity: int = 4,
     salts: int = 16,
     max_capacity: int | None = None,
-    skinny: bool = False,
 ) -> DataFrame:
     """Admit + slot one round of fetches.
 
@@ -68,26 +67,6 @@ def schedule_round(
     ``max_capacity`` — precomputed :func:`max_bucket_capacity`; when None it
                       is computed here (convenience for one-shot callers —
                       loops should hoist it).
-    ``skinny``      — rank on a (host, url_hash, priority) projection and
-                      join the full rows back at the end, so the two
-                      ranking shuffles move ~30 B/row instead of the whole
-                      candidate row (URL spellings are the bulk). The
-                      join-back keys on ``url_hash`` — the same partitioning
-                      the dedupe stage just produced — and its build side is
-                      the admitted set, bounded by hosts x capacity, so
-                      Catalyst/AQE broadcasts it locally and never pays a
-                      second full-width candidate shuffle. Semantics are
-                      byte-identical either way (the ranking order reads
-                      only the skinny columns; tests pin equality).
-                      Default OFF: an interleaved A/B on the north-metric
-                      bench (2M URLs, local[16], best-of-3 passes) measured
-                      the single-pass plan 1.1-1.25x FASTER here — the
-                      join-back's extra scan of the candidate cache costs
-                      more than the narrower shuffle saves when rows are
-                      ~80 B and lz4 eats the URL prefixes. The option
-                      exists for genuinely string-heavy frontiers on real
-                      clusters, where the scarce resource is network bytes
-                      across executors, not one box's memory bus.
 
     Returns admitted rows with (slot INT, scheduled_ts TIMESTAMP,
     crawl_delay_s DOUBLE) added.
@@ -99,8 +78,7 @@ def schedule_round(
         F.col("crawl_delay_s").alias("_delay"),
         F.col("bucket_capacity").alias("_cap"),
     )
-    base = candidates.select("host", "url_hash", "priority") if skinny else candidates
-    with_policy = base.join(F.broadcast(policy), "host", "left").withColumns(
+    with_policy = candidates.join(F.broadcast(policy), "host", "left").withColumns(
         {
             # nanvl: a NaN delay means "not specified" exactly like null
             # (pandas-built policy tables coerce None -> NaN; without the
@@ -124,7 +102,7 @@ def schedule_round(
     thinned = per_host_top_k(with_policy, k=max_cap, salts=salts)
 
     w = Window.partitionBy("host").orderBy(*_order_cols())
-    admitted = (
+    return (
         thinned.withColumn("slot", F.row_number().over(w) - F.lit(1))
         .filter(F.col("slot") < F.col("_cap"))
         .withColumn(
@@ -136,10 +114,4 @@ def schedule_round(
         )
         .withColumnRenamed("_delay", "crawl_delay_s")
         .drop("_cap")
-    )
-    if not skinny:
-        return admitted
-    return candidates.join(
-        admitted.select("url_hash", "crawl_delay_s", "slot", "scheduled_ts"),
-        "url_hash",
     )

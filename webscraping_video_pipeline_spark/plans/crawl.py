@@ -54,10 +54,9 @@ class CrawlConfig:
     max_attempts: int = 3
     round_interval_s: int = 3600
     discover_outlinks: bool = True
-    use_bloom: bool = True  # False -> exact anti-join only, no prefilter
-    # prefilter flavor when use_bloom is True: "bloom" (OR-mergeable,
-    # smallest) or "cuckoo" (deletable — re-crawl-after-TTL support);
-    # results are identical either way (exact-join backstop decides)
+    # seen-set prefilter flavor: "bloom" (OR-mergeable, smallest) or
+    # "cuckoo" (deletable — re-crawl-after-TTL support); results are
+    # identical either way (exact-join backstop decides)
     seen_filter: str = "bloom"
     # fixed bitset width per shard so cross-round OR-merge works; size for
     # the shard's expected FINAL population (10 bits/key): the default
@@ -175,9 +174,7 @@ class CrawlEngine:
         # is never rewritten — the parquet analog of Iceberg appends
         url_seen = cat.read_appended("url_seen", round_no - 1)
         shards_table = f"{cfg.seen_filter}_shards"
-        shards = (
-            cat.read_snapshot(shards_table, round_no - 1) if cfg.use_bloom else None
-        )
+        shards = cat.read_snapshot(shards_table, round_no - 1)
 
         due = frontier.filter(F.col("next_attempt_round") <= round_no)
         deferred = frontier.filter(F.col("next_attempt_round") > round_no)
@@ -313,7 +310,7 @@ class CrawlEngine:
             seen_delta if url_seen is None else url_seen.unionByName(seen_delta)
         )
 
-        if cfg.use_bloom and cfg.seen_filter == "cuckoo":
+        if cfg.seen_filter == "cuckoo":
             # incremental: insert the delta into the standing cuckoo tables
             # (O(delta) work per round; deletable for re-crawl-after-TTL)
             from ..operators.cuckoo import build_cuckoo_shards, insert_into_cuckoo_shards
@@ -332,7 +329,7 @@ class CrawlEngine:
                     n_buckets_per_shard=cfg.cuckoo_buckets_per_shard,
                 )
             cat.write_snapshot(shards_table, shards_next, round_no)
-        elif cfg.use_bloom:
+        else:
             # incremental: OR the delta's shards into the standing bitsets
             # (O(delta) build + O(n_shards) merge per round, SCALE.md §1)
             delta_shards = build_bloom_shards(
@@ -470,7 +467,7 @@ class CrawlEngine:
                 part = cat.root / "url_seen" / f"round={r}"
                 if part.exists():
                     shutil.rmtree(part)
-        if n_expired and cfg.use_bloom:
+        if n_expired:
             shards_table = f"{cfg.seen_filter}_shards"
             shards = cat.read_snapshot(shards_table, last)
             if shards is not None:

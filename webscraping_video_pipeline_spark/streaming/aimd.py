@@ -6,13 +6,11 @@ carried rate that q94's docstring names as the production form, made
 concrete. The frontier can read "what rate should host H get right
 now" at any point without replaying the whole outcome history.
 
-State discipline mirrors ``streaming/revisit.py`` / ``warc.py``: the
-standing state is APPEND-ONLY per-batch DELTA rows (host, d_events,
-d_errors, closing_rate_micro, last_ts, last_event_id), partitioned by
-``batch_id``, partition-as-commit-marker, dynamic overwrite on replay —
-an at-least-once redelivery rewrites its own partition, never
-double-folds (the fold is deterministic given the carry, and the carry
-comes from COMMITTED partitions only).
+State: APPEND-ONLY per-batch DELTA rows (host, d_events, d_errors,
+closing_rate_micro, last_ts, last_event_id), one ``batch_id`` partition
+per batch under the ``streaming/commit.py`` ledger. The fold is
+deterministic given the carry, and the carry comes from committed
+partitions only, so a replayed batch never double-folds.
 
 The fold itself is the q94 integer-micro-unit AIMD (success: +0.1 rps
 capped at 10; error: integer-halve floored at 0.125) run JVM-side via
@@ -30,13 +28,10 @@ learned rates across rounds and restarts — this is that state.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .commit import batch_committed, mark_committed, scrub_partial
-from .micro_batch import _has_batches
+from .commit import has_batches, run_ledger
 from .revisit import EVENTS
 
 AIMD_HOSTS = 50  # must match contract.crawl_ops._AIMD_HOSTS
@@ -81,7 +76,7 @@ def _batch_delta(batch_df: DataFrame, prev_tail: DataFrame | None) -> DataFrame:
 
 def _state_tail(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Latest committed closing rate per host — the next fold's carry."""
-    if not _has_batches(state_dir):
+    if not has_batches(state_dir):
         return None
     s = spark.read.parquet(state_dir)
     pick = F.max(
@@ -97,33 +92,12 @@ def stream_aimd_rates(spark: SparkSession, events_dir: str, workdir: str) -> Non
     micro-batch folding from the carried rates and appending its delta
     partition. Restartable and idempotent."""
     state_dir = f"{workdir}/aimd_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(batch_df, _state_tail(spark, state_dir)).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(EVENTS)
-        .parquet(events_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(EVENTS).parquet(events_dir),
+        f"{workdir}/ckpt",
+        [state_dir],
+        lambda batch_df, k: [_batch_delta(batch_df, _state_tail(spark, state_dir))],
     )
-    q.awaitTermination()
 
 
 def current_rates(spark: SparkSession, workdir: str) -> DataFrame:

@@ -10,11 +10,10 @@ row PER REPLICATE (r, d_w_total, d_w_kept, d_docs, d_keeps): exactly
 {R} + 0 rows per batch regardless of batch size, pre-aggregated
 map-side. Weights depend only on (replicate, doc_id) — never on batch
 boundaries — so stream ≡ batch holds for ANY file landing order,
-bit-identically (q197's integer arithmetic throughout). Partitioned by
-``batch_id`` with the ``streaming/commit.py`` marker discipline: replays
-of a half-committed batch scrub and rewrite their own partition
-(``tests/test_streaming_bootstrap.py`` pins stream ≡ batch, out-of-order
-equivalence, and replay idempotence).
+bit-identically (q197's integer arithmetic throughout). Sums are not
+idempotent; the ``streaming/commit.py`` ledger keeps replays from
+double-adding (``tests/test_streaming_bootstrap.py`` pins stream ≡ batch,
+out-of-order equivalence, and replay idempotence).
 
 Reference semantic: the reference's progress metrics are running counts
 (parallel_scraper_manager.py); a measurement layer keeps running error
@@ -27,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..contract.quality import _BOOT_MIN_WORDS, _BOOT_R, _BOOT_W_SQL
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import run_ledger
 from .hostprior import DOCS
 
 
@@ -63,36 +62,13 @@ def _batch_delta(batch_df: DataFrame) -> DataFrame:
 def stream_bootstrap(spark: SparkSession, docs_dir: str, workdir: str) -> None:
     """Drain all available document files (trigger availableNow), each
     micro-batch appending its per-replicate delta partition. Restartable
-    and idempotent: a replayed batch rewrites its own batch_id
-    partition."""
-    state_dir = f"{workdir}/bootstrap_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(DOCS)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    and idempotent."""
+    run_ledger(
+        spark.readStream.schema(DOCS).parquet(docs_dir),
+        f"{workdir}/ckpt",
+        [f"{workdir}/bootstrap_state"],
+        lambda batch_df, k: [_batch_delta(batch_df)],
     )
-    q.awaitTermination()
 
 
 def bootstrap_ci(spark: SparkSession, workdir: str) -> DataFrame:

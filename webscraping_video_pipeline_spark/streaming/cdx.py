@@ -4,13 +4,11 @@ appended to the archive index with byte offsets that CONTINUE from the
 accumulated per-WARC-file total — incremental archive indexing, so a
 petabyte archive stays random-access while it is still being written.
 
-State discipline mirrors ``streaming/corpus.py`` / ``revisit.py``: the
-index rows themselves are the state, APPEND-ONLY and partitioned by
-``batch_id``; the partition is the commit marker, so an at-least-once
-replay of a half-committed batch rewrites its own partition (dynamic
-overwrite) instead of double-shifting every later offset. The per-file
-base offset for a new batch is a rollup over committed partitions
-(sum of rec_len per warc_file — O(files) rows after map-side combine).
+State: the index rows themselves, APPEND-ONLY, one ``batch_id``
+partition per batch under the ``streaming/commit.py`` ledger, so a
+replayed batch never double-shifts a later offset. The per-file base
+offset for a new batch is a rollup over committed partitions (sum of
+rec_len per warc_file — O(files) rows after map-side combine).
 
 When files land in doc_id order the accumulated index is row-identical
 to batch q91 over the concatenated table
@@ -26,14 +24,11 @@ archive-index half of that append at Common-Crawl scale.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .commit import batch_committed, mark_committed, scrub_partial
-from .micro_batch import _has_batches
+from .commit import has_batches, run_ledger
 
 # Mirrors the driver testdata `documents` table.
 DOCUMENTS = T.StructType(
@@ -78,7 +73,7 @@ def _render_sized(batch_df: DataFrame) -> DataFrame:
 def _file_bases(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """Accumulated bytes per warc_file across committed partitions — the
     base offset the next batch's records start at."""
-    if not _has_batches(index_dir):
+    if not has_batches(index_dir):
         return None
     s = spark.read.parquet(index_dir)
     return s.groupBy("warc_file").agg(F.sum("rec_len").alias("base"))
@@ -90,12 +85,7 @@ def stream_cdx_index(spark: SparkSession, docs_dir: str, workdir: str) -> None:
     accumulated per-file totals. Restartable and idempotent."""
     index_dir = f"{workdir}/cdx_index"
 
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{index_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
+    def delta_fn(batch_df: DataFrame, k: int):
         sized = _render_sized(batch_df)
         bases = _file_bases(spark, index_dir)
         if bases is not None:
@@ -109,7 +99,7 @@ def stream_cdx_index(spark: SparkSession, docs_dir: str, workdir: str) -> None:
             .orderBy("doc_id")
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        out = sized.select(
+        yield sized.select(
             "warc_file",
             "doc_id",
             (F.col("base") + F.coalesce(F.sum("rec_len").over(w), F.lit(0)))
@@ -117,24 +107,14 @@ def stream_cdx_index(spark: SparkSession, docs_dir: str, workdir: str) -> None:
             .alias("rec_offset"),
             "rec_len",
             "digest",
-        ).withColumn("batch_id", F.lit(bid).cast("long"))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(index_dir)
         )
-        mark_committed(part)
 
-    q = (
-        spark.readStream.schema(DOCUMENTS)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(DOCUMENTS).parquet(docs_dir),
+        f"{workdir}/ckpt",
+        [index_dir],
+        delta_fn,
     )
-    q.awaitTermination()
 
 
 def cdx_index(spark: SparkSession, workdir: str) -> DataFrame:

@@ -28,13 +28,11 @@ pair, pushing the bound to n^2/2^97) or to a 128-bit hash.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .commit import batch_committed, mark_committed, scrub_partial
-from .micro_batch import _has_batches
+from ..schemas import DOCUMENTS
+from .commit import has_batches, run_ledger
 
 CHUNK_WORDS = 3
 
@@ -59,31 +57,22 @@ def stream_chunk_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> None
     """Drain all available document files (trigger availableNow), each
     micro-batch deduplicating chunk occurrences against the accumulated
     chunk-seen state plus in-batch first-occurrence rank, then appending
-    cleaned documents. Restartable AND idempotent, same discipline as
-    ``stream_frontier_rounds``: both sinks are batch_id-partitioned with
-    dynamic-partition overwrite; an explicit ``_COMMITTED`` marker lands
-    in the chunk-seen partition AFTER both writes (commit.py), so an
-    at-least-once replay of a half-committed batch scrubs and rewrites
-    both partitions instead of double-counting (the no-chunk-kept-twice
-    invariant survives crash/restart).
+    cleaned documents. Restartable AND idempotent through the
+    ``streaming/commit.py`` ledger (marker in the chunk-seen partition),
+    so the no-chunk-kept-twice invariant survives crash/restart.
     """
     seen_dir = f"{workdir}/chunk_seen"
-    out_dir = f"{workdir}/cleaned_docs"
 
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        seen_part = f"{seen_dir}/batch_id={bid}"
-        if batch_committed(seen_part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(seen_part, f"{out_dir}/batch_id={bid}")
+    def delta_fn(batch_df: DataFrame, k: int):
         ch = chunked(batch_df)
         # in-batch first occurrence: global (doc_id, j) order, like q64
         w_first = Window.partitionBy("chunk_hash").orderBy("doc_id", "j")
         ch = ch.withColumn("occ", F.row_number().over(w_first))
-        seen = spark.read.parquet(seen_dir) if _has_batches(seen_dir) else None
-        if seen is not None:
+        if has_batches(seen_dir):
             ch = ch.join(
-                seen.select("chunk_hash").withColumn("_seen", F.lit(True)),
+                spark.read.parquet(seen_dir)
+                .select("chunk_hash")
+                .withColumn("_seen", F.lit(True)),
                 "chunk_hash",
                 "left",
             ).withColumn("_seen", F.coalesce(F.col("_seen"), F.lit(False)))
@@ -97,40 +86,20 @@ def stream_chunk_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> None
             ),
             " ",
         )
-        out = ch.groupBy("doc_id").agg(
+        yield ch.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("n_chunks"),
             F.sum((~keep).cast("long")).alias("n_dropped"),
             cleaned.alias("cleaned_text"),
-        ).withColumn("batch_id", F.lit(bid).cast("long"))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
         )
-        # seen delta last, then the marker: only this batch's NEWLY-KEPT
-        # chunk hashes
-        (
-            ch.filter(keep)
-            .select("chunk_hash")
-            .withColumn("batch_id", F.lit(bid).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(seen_dir)
-        )
-        mark_committed(seen_part)
+        # seen delta last: only this batch's NEWLY-KEPT chunk hashes
+        yield ch.filter(keep).select("chunk_hash")
 
-    from ..schemas import DOCUMENTS
-
-    stream = spark.readStream.schema(DOCUMENTS).parquet(docs_dir)
-    q = (
-        stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(DOCUMENTS).parquet(docs_dir),
+        f"{workdir}/ckpt",
+        [f"{workdir}/cleaned_docs", seen_dir],
+        delta_fn,
     )
-    q.awaitTermination()
 
 
 def stream_intradoc_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> None:
@@ -139,14 +108,12 @@ def stream_intradoc_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> N
     document's cleanup depends only on its own chunks — the streaming
     form needs NO state at all, so it is the streaming-safe pre-thinning
     stage to run in front of the stateful corpus-wide chunk dedup above
-    (same composition as batch: q70 before q64/q66). Output is
-    batch_id-partitioned with dynamic overwrite, so at-least-once
-    replays are idempotent without any commit marker (no cross-batch
-    state to half-commit).
+    (same composition as batch: q70 before q64/q66). The output sink
+    still runs through the ``streaming/commit.py`` ledger, so replays
+    rewrite their own partition.
     """
-    out_dir = f"{workdir}/intradoc_cleaned"
 
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
+    def delta_fn(batch_df: DataFrame, k: int):
         d = batch_df.select("doc_id", F.split("text", " ").alias("ws"))
         chs = F.expr(
             f"transform(sequence(1, cast(ceil(size(ws) / {CHUNK_WORDS}.0) as int)),"
@@ -155,27 +122,16 @@ def stream_intradoc_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> N
         )
         d = d.withColumn("chs", chs)
         kept = F.expr("filter(chs, (c, i) -> array_position(chs, c) == i + 1)")
-        (
-            d.select(
-                "doc_id",
-                F.size("chs").cast("long").alias("n_chunks"),
-                (F.size("chs") - F.size(kept)).cast("long").alias("n_dropped"),
-                F.array_join(kept, " ").alias("cleaned_text"),
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
+        yield d.select(
+            "doc_id",
+            F.size("chs").cast("long").alias("n_chunks"),
+            (F.size("chs") - F.size(kept)).cast("long").alias("n_dropped"),
+            F.array_join(kept, " ").alias("cleaned_text"),
         )
 
-    from ..schemas import DOCUMENTS
-
-    stream = spark.readStream.schema(DOCUMENTS).parquet(docs_dir)
-    q = (
-        stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt_intradoc")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(DOCUMENTS).parquet(docs_dir),
+        f"{workdir}/ckpt_intradoc",
+        [f"{workdir}/intradoc_cleaned"],
+        delta_fn,
     )
-    q.awaitTermination()

@@ -11,10 +11,9 @@ bucket rows (event_type, idx, d_c = the batch's count per bucket). HDR
 bucket counts merge by plain SUM — associative and commutative — so
 stream ≡ batch holds for ANY file landing order (the
 ``streaming/hostprior.py`` additive-state argument). Sums are NOT
-idempotent, so the ``streaming/commit.py`` batch_id-partition marker
-discipline is load-bearing here (unlike ``streaming/hll.py``'s MAX
-registers): a replayed batch must rewrite its own partition, never
-double-add.
+idempotent, so the ``streaming/commit.py`` ledger is load-bearing here
+(unlike ``streaming/hll.py``'s MAX registers): it keeps a replayed batch
+from double-adding.
 
 ``latency_quantiles`` folds the accumulated deltas with q177's exact
 cumulative-walk arithmetic (integer ceil-rank, bucket lower bounds via
@@ -34,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..contract.monitor import _HDR_PCTS, _HDR_S
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import run_ledger
 
 # Mirrors the driver testdata `events` table.
 EVENTS = T.StructType(
@@ -77,37 +76,13 @@ def _batch_delta(batch_df: DataFrame) -> DataFrame:
 def stream_hdr_buckets(spark: SparkSession, events_dir: str, workdir: str) -> None:
     """Drain all available event files (trigger availableNow), each
     micro-batch appending its per-bucket delta partition. Restartable
-    and idempotent: a replayed batch rewrites its own batch_id partition
-    (counts are additive — the marker discipline is what keeps replays
-    from double-adding)."""
-    state_dir = f"{workdir}/hdr_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(EVENTS)
-        .parquet(events_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    and idempotent."""
+    run_ledger(
+        spark.readStream.schema(EVENTS).parquet(events_dir),
+        f"{workdir}/ckpt",
+        [f"{workdir}/hdr_state"],
+        lambda batch_df, k: [_batch_delta(batch_df)],
     )
-    q.awaitTermination()
 
 
 def latency_quantiles(spark: SparkSession, workdir: str) -> DataFrame:

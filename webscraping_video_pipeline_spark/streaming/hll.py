@@ -11,9 +11,8 @@ register). HLL registers merge by elementwise MAX — associative,
 commutative AND idempotent — so stream ≡ batch holds for ANY file
 landing order (the ``streaming/hostprior.py`` order-independence
 argument, strengthened: even a double-applied delta could not corrupt a
-MAX). The ``streaming/commit.py`` batch_id-partition marker discipline
-is kept anyway so replays rewrite their own partition — the state stays
-an exact per-batch ledger, not just a correct aggregate.
+MAX). The ``streaming/commit.py`` ledger is kept anyway, so the state
+stays an exact per-batch ledger, not just a correct aggregate.
 
 ``url_cardinality`` folds the accumulated registers with q174's exact
 estimator arithmetic (dyadic harmonic sum, raw Flajolet estimate,
@@ -35,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..contract.monitor import _HLL_ALPHA, _HLL_M, _HLL_MOD, _HLL_W
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import run_ledger
 from .hostprior import DOCS
 
 
@@ -63,35 +62,13 @@ def _batch_delta(batch_df: DataFrame) -> DataFrame:
 def stream_hll_registers(spark: SparkSession, docs_dir: str, workdir: str) -> None:
     """Drain all available document files (trigger availableNow), each
     micro-batch appending its per-register delta partition. Restartable
-    and idempotent: a replayed batch rewrites its own batch_id partition."""
-    state_dir = f"{workdir}/hll_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(DOCS)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    and idempotent."""
+    run_ledger(
+        spark.readStream.schema(DOCS).parquet(docs_dir),
+        f"{workdir}/ckpt",
+        [f"{workdir}/hll_state"],
+        lambda batch_df, k: [_batch_delta(batch_df)],
     )
-    q.awaitTermination()
 
 
 def url_cardinality(spark: SparkSession, workdir: str) -> DataFrame:

@@ -9,10 +9,8 @@ standing state is append-only per-batch DELTA rows (host, d_docs,
 d_keeps) with no cross-batch boundary carry at all (unlike
 ``streaming/revisit.py``'s lag state): counters are order-independent,
 so stream ≡ batch holds for ANY file landing order, not just
-timestamp order. Partitioned by ``batch_id`` with the
-``streaming/commit.py`` marker discipline: an at-least-once replay of a
-half-committed batch scrubs and rewrites its own partition instead of
-double-counting.
+timestamp order. The ``streaming/commit.py`` ledger keeps a replayed
+batch from double-counting.
 
 The trust table is a rollup over the delta partitions (O(hosts) rows)
 applying q159's exact empirical-Bayes shrinkage arithmetic — BIGINT
@@ -32,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..contract.quality import _EB_HOSTS, _EB_M
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import run_ledger
 
 # Mirrors the driver testdata `documents` table.
 DOCS = T.StructType(
@@ -73,35 +71,13 @@ def _batch_delta(batch_df: DataFrame) -> DataFrame:
 def stream_host_prior(spark: SparkSession, docs_dir: str, workdir: str) -> None:
     """Drain all available document files (trigger availableNow), each
     micro-batch appending its per-host delta partition. Restartable and
-    idempotent: a replayed batch rewrites its own batch_id partition."""
-    state_dir = f"{workdir}/hostprior_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(DOCS)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    idempotent."""
+    run_ledger(
+        spark.readStream.schema(DOCS).parquet(docs_dir),
+        f"{workdir}/ckpt",
+        [f"{workdir}/hostprior_state"],
+        lambda batch_df, k: [_batch_delta(batch_df)],
     )
-    q.awaitTermination()
 
 
 def host_trust(spark: SparkSession, workdir: str) -> DataFrame:

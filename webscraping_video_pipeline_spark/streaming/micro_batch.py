@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 from ..operators.dedup import dedupe_against_seen
 from ..operators.politeness import schedule_round
 from ..plans.crawl import BASE_ROUND_TS, canonicalize_candidates
-from .commit import batch_committed, mark_committed, scrub_partial
+from ..schemas import SEEDS
+from .commit import has_batches, run_ledger
 
 
 def stream_frontier_rounds(
@@ -35,90 +36,33 @@ def stream_frontier_rounds(
     salts: int = 4,
 ) -> None:
     """Drain all available seed files (trigger availableNow) through
-    per-micro-batch scheduling rounds. Restartable AND idempotent:
-    foreachBatch gives at-least-once delivery, so both sinks are
-    partitioned by ``batch_id`` and written with dynamic-partition
-    overwrite — a replayed batch_id rewrites its own partition instead of
-    appending duplicates. Commitment is an explicit ``_COMMITTED`` marker
-    in the seen-side partition, dropped AFTER both writes (commit.py): a
-    replay of an unmarked batch scrubs its partial partitions and rewrites
-    both, preserving the no-URL-scheduled-twice invariant across
-    crash/restart."""
-    from ..schemas import SEEDS
-
+    per-micro-batch scheduling rounds. Restartable AND idempotent through
+    the ``streaming/commit.py`` ledger: ``scheduled_log`` is written
+    first and the ``seen`` delta last (it holds the marker), so the
+    no-URL-scheduled-twice invariant survives crash/restart."""
     seen_dir = f"{workdir}/seen"
-    out_dir = f"{workdir}/scheduled_log"
 
-    def round_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        seen_part = f"{seen_dir}/batch_id={bid}"
-        if batch_committed(seen_part):
-            return  # batch fully committed (at-least-once replay)
-        scrub_partial(seen_part, f"{out_dir}/batch_id={bid}")
+    def delta_fn(batch_df: DataFrame, k: int):
         cands = canonicalize_candidates(batch_df, "url").withColumn(
             "priority", F.coalesce(F.col("priority"), F.lit(0.0))
         )
-        # _has_batches, not a bare listdir: a crash can leave only _SUCCESS
-        # behind, which would make the parquet read fail schema inference
-        seen = spark.read.parquet(seen_dir) if _has_batches(seen_dir) else None
+        seen = spark.read.parquet(seen_dir) if has_batches(seen_dir) else None
         fresh = dedupe_against_seen(cands, seen, None)
         round_ts = F.lit(BASE_ROUND_TS).cast("timestamp") + F.make_interval(
-            secs=F.lit(bid * round_interval_s)
+            secs=F.lit(k * round_interval_s)
         )
-        sched = schedule_round(fresh, host_policy, round_ts, salts=salts).withColumn(
-            "batch_id", F.lit(bid).cast("long")
+        sched = schedule_round(fresh, host_policy, round_ts, salts=salts)
+        yield sched.select("canon_url", "url_hash", "host", "slot", "scheduled_ts")
+        yield sched.select(
+            "url_hash", "canon_url", F.lit(k).cast("int").alias("seen_round")
         )
-        # scheduled_log first, seen last: a crash between the two leaves the
-        # commit marker absent, so the replay rewrites both partitions
-        (
-            sched.select(
-                "canon_url", "url_hash", "host", "slot", "scheduled_ts", "batch_id"
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        (
-            sched.select(
-                "url_hash",
-                "canon_url",
-                F.lit(bid).cast("int").alias("seen_round"),
-                "batch_id",
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(seen_dir)
-        )
-        mark_committed(seen_part)
 
-    stream = spark.readStream.schema(SEEDS).parquet(seeds_dir)
-    q = (
-        stream.writeStream.foreachBatch(round_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(SEEDS).parquet(seeds_dir),
+        f"{workdir}/ckpt",
+        [f"{workdir}/scheduled_log", seen_dir],
+        delta_fn,
     )
-    q.awaitTermination()
-
-
-def _has_batches(base: str) -> bool:
-    """True when the dir holds at least one batch_id= partition with a
-    DATA file (a bare _SUCCESS left behind by a partition delete, or a
-    marker-only partition from a zero-row batch, must not count — a
-    parquet read over markers alone would fail schema inference)."""
-    if not os.path.isdir(base):
-        return False
-    for n in os.listdir(base):
-        sub = f"{base}/{n}"
-        if (
-            n.startswith("batch_id=")
-            and os.path.isdir(sub)
-            and any(not f.startswith(("_", ".")) for f in os.listdir(sub))
-        ):
-            return True
-    return False
 
 
 def _latest_partition(base: str, below: int) -> str | None:
@@ -161,22 +105,20 @@ def stream_crawl_rounds(
     fetch_log is row-identical to the batch engine's on the same input
     (asserted by ``tests/test_streaming.py``).
 
-    State across batches (each a batch_id-partitioned parquet dir; the seen
-    partition is written LAST and doubles as the commit marker, making
-    at-least-once foreachBatch replay idempotent and restart-safe):
+    State across batches (sinks of the ``streaming/commit.py`` ledger, in
+    write order; ``seen`` is LAST and holds the marker):
 
-    - ``seen``      — append-only delta per batch (fetched + struck-out)
-    - ``pending``   — SNAPSHOT per batch of the live frontier (not-admitted
-                      survivors + deferred + retryable)
     - ``fetch_log`` / ``scheduled_log`` — per-batch appends
-    """
-    from ..schemas import SEEDS
+    - ``pending``   — SNAPSHOT per batch of the live frontier (not-admitted
+                      survivors + deferred + retryable); an empty frontier
+                      still leaves its partition, so a later batch never
+                      resurrects an older snapshot
+    - ``seen``      — append-only delta per batch (fetched + struck-out)
 
+    ``pages`` is the caller's ``prepare_pages()`` output.
+    """
     seen_dir = f"{workdir}/seen"
     pending_dir = f"{workdir}/pending"
-    fetch_dir = f"{workdir}/fetch_log"
-    sched_dir = f"{workdir}/scheduled_log"
-    pages_prepared = pages  # caller passes prepare_pages() output
     max_cap = None  # resolved lazily once, outside the per-batch hot path
 
     pend_cols = [
@@ -184,24 +126,13 @@ def stream_crawl_rounds(
         "attempts", "next_attempt_batch",
     ]
 
-    def round_fn(batch_df: DataFrame, batch_id: int) -> None:
+    def delta_fn(batch_df: DataFrame, bid: int):
         nonlocal max_cap
         from ..operators.frontier import fetch_join
         from ..operators.politeness import max_bucket_capacity
 
         if max_cap is None:
             max_cap = max_bucket_capacity(host_policy, default_capacity)
-        bid = int(batch_id)
-        seen_part = f"{seen_dir}/batch_id={bid}"
-        if batch_committed(seen_part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(
-            seen_part,
-            f"{fetch_dir}/batch_id={bid}",
-            f"{sched_dir}/batch_id={bid}",
-            f"{pending_dir}/batch_id={bid}",
-        )
-
         new_cands = canonicalize_candidates(batch_df, "url").select(
             "url", "canon_url", "url_hash", "host",
             F.coalesce(F.col("priority"), F.lit(0.0)).alias("priority"),
@@ -221,7 +152,7 @@ def stream_crawl_rounds(
             deferred = pending.filter(F.col("next_attempt_batch") > bid)
             cands = cands.unionByName(due)
 
-        seen = spark.read.parquet(seen_dir) if _has_batches(seen_dir) else None
+        seen = spark.read.parquet(seen_dir) if has_batches(seen_dir) else None
         fresh = dedupe_against_seen(cands, seen, None)
         round_ts = F.lit(BASE_ROUND_TS).cast("timestamp") + F.make_interval(
             secs=F.lit(bid * round_interval_s)
@@ -261,7 +192,7 @@ def stream_crawl_rounds(
             max_capacity=max_cap,
         )
         joined = fetch_join(
-            sched, pages_prepared.select("canon_url", "warc_ts", "html", "lang")
+            sched, pages.select("canon_url", "warc_ts", "html", "lang")
         )
         # html streams through ONE projection and is never cached (same
         # rule as the batch round): harvest hrefs here when discovery is on
@@ -351,40 +282,18 @@ def stream_crawl_rounds(
             newly_seen.select("url_hash"), "url_hash", "left_anti"
         )
 
-        def _write(df: DataFrame, base: str) -> None:
-            (
-                df.withColumn("batch_id", F.lit(bid).cast("long"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(base)
-            )
-
-        # commit order: logs + pending, then seen, then the _COMMITTED marker
-        _write(
-            fetched.select(
-                "canon_url", "url_hash", "host", "scheduled_ts",
-                F.col("slot").cast("int").alias("slot"), "status",
-            ),
-            fetch_dir,
+        yield fetched.select(
+            "canon_url", "url_hash", "host", "scheduled_ts",
+            F.col("slot").cast("int").alias("slot"), "status",
         )
-        _write(
-            fetched.select("canon_url", "url_hash", "host", "slot", "scheduled_ts"),
-            sched_dir,
-        )
-        # pending is a SNAPSHOT: write its batch dir directly (a partitionBy
-        # write would emit nothing for an empty frontier, and a later batch
-        # would then wrongly resurrect the previous snapshot)
-        pending_next.write.mode("overwrite").parquet(f"{pending_dir}/batch_id={bid}")
-        _write(newly_seen, seen_dir)
-        mark_committed(seen_part)
+        yield fetched.select("canon_url", "url_hash", "host", "slot", "scheduled_ts")
+        yield pending_next
+        yield newly_seen
         fetched.unpersist()
 
-    stream = spark.readStream.schema(SEEDS).parquet(seeds_dir)
-    q = (
-        stream.writeStream.foreachBatch(round_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(SEEDS).parquet(seeds_dir),
+        f"{workdir}/ckpt",
+        [f"{workdir}/fetch_log", f"{workdir}/scheduled_log", pending_dir, seen_dir],
+        delta_fn,
     )
-    q.awaitTermination()

@@ -23,9 +23,8 @@ State shape (the 10^10-doc story): per KEPT document the state stores
 only (a) its 4 band signatures — 8-hex-char strings, the same md5
 trigram-minhash family as q25 — and (b) its distinct-word xxhash64
 array for the Jaccard verdict; never document text. Both tables are
-batch_id-partitioned, written after the cleaned output with the
-word-hash table LAST as the commit marker (the crawl frontier's
-at-least-once replay discipline). The band join is the same bucketed
+sinks of the ``streaming/commit.py`` ledger, written after the cleaned
+output with the word-hash table LAST (it holds the marker). The band join is the same bucketed
 shape as q25 (capped in-batch via operators/lsh.py); verification runs
 only on band-collision candidates; the greedy resolution loop touches
 only edge-incident docs and runs O(chain depth) rounds (near-dup chains
@@ -36,14 +35,12 @@ as the chunk-seen state (streaming/corpus.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.lsh import MINHASH_BUCKET_CAP, cap_buckets
-from .commit import batch_committed, mark_committed, scrub_partial
-from .micro_batch import _has_batches
+from ..schemas import DOCUMENTS
+from .commit import has_batches, run_ledger
 
 JACCARD_THRESHOLD = 0.7
 
@@ -167,22 +164,12 @@ def stream_neardup_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> No
     micro-batch drops arrivals that are verified near-dups of the kept
     state or of a lower-id kept doc in the same batch, appends survivors
     to ``kept_docs``, then appends the survivors' band signatures and
-    word hashes to the state (an explicit ``_COMMITTED`` marker lands in
-    the word-hash partition after ALL three writes — commit.py — so an
-    at-least-once replay of a half-committed batch scrubs and rewrites
-    all three partitions instead of double-counting)."""
+    word hashes to the state (``streaming/commit.py`` ledger, marker in
+    the word-hash partition)."""
     bands_dir = f"{workdir}/state_bands"
     wh_dir = f"{workdir}/state_wordhashes"
-    out_dir = f"{workdir}/kept_docs"
 
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        marker = f"{wh_dir}/batch_id={bid}"
-        if batch_committed(marker):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(
-            marker, f"{out_dir}/batch_id={bid}", f"{bands_dir}/batch_id={bid}"
-        )
+    def delta_fn(batch_df: DataFrame, k: int):
         docs = batch_df.select("doc_id", "text").localCheckpoint(eager=True)
         bands = cap_buckets(
             minhash_bands(docs), ["band", "sig"], MINHASH_BUCKET_CAP
@@ -190,7 +177,7 @@ def stream_neardup_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> No
         wh = word_hashes(docs).localCheckpoint(eager=True)
 
         # 1) candidates vs the kept state (band-bucket join, then verify)
-        if _has_batches(wh_dir):
+        if has_batches(wh_dir):
             st_bands = spark.read.parquet(bands_dir)
             st_wh = spark.read.parquet(wh_dir).select(
                 F.col("doc_id").alias("st_id"), F.col("wh").alias("st_wh")
@@ -232,40 +219,12 @@ def stream_neardup_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> No
             .select("lo", "hi")
         )
         kept = _greedy_resolve(spark, docs, dropped0, edges)
+        for df in (docs, bands, wh):
+            yield df.join(kept, "doc_id")
 
-        out = (
-            docs.join(kept, "doc_id")
-            .withColumn("batch_id", F.lit(bid).cast("long"))
-        )
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_dir)
-        (
-            bands.join(kept, "doc_id")
-            .withColumn("batch_id", F.lit(bid).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(bands_dir)
-        )
-        # word-hash delta last, then the marker
-        (
-            wh.join(kept, "doc_id")
-            .withColumn("batch_id", F.lit(bid).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(wh_dir)
-        )
-        mark_committed(marker)
-
-    from ..schemas import DOCUMENTS
-
-    stream = spark.readStream.schema(DOCUMENTS).parquet(docs_dir)
-    q = (
-        stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt_neardup")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(DOCUMENTS).parquet(docs_dir),
+        f"{workdir}/ckpt_neardup",
+        [f"{workdir}/kept_docs", bands_dir, wh_dir],
+        delta_fn,
     )
-    q.awaitTermination()

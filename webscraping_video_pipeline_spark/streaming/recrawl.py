@@ -5,13 +5,10 @@ scheduler can allocate fetch slots at any point without rescanning the
 full fetch log — the shape a production scheduler actually runs in,
 where the fetch log only ever grows.
 
-State discipline mirrors ``streaming/revisit.py`` exactly: the standing
-state is APPEND-ONLY per-batch DELTA rows (url_id, d_fetches,
-d_changes, first_ts, last_ts, last_event_id, last_sk) partitioned by
-``batch_id``, with the per-partition completion markers of
-``streaming/commit.py`` so an at-least-once replay of a half-committed
-batch scrubs and rewrites its own partition instead of double-counting.
-The change counter uses q182's content sketch (floor(value) mod 2 — the
+State mirrors ``streaming/revisit.py``: APPEND-ONLY per-batch DELTA
+rows (url_id, d_fetches, d_changes, first_ts, last_ts, last_event_id,
+last_sk), one ``batch_id`` partition per batch under the
+``streaming/commit.py`` ledger. The change counter uses q182's content sketch (floor(value) mod 2 — the
 coarse per-fetch digest); within a batch, transitions are counted by
 the same (ts, event_id)-ordered lag as batch q182, and at the batch
 BOUNDARY the accumulated state's last sketch plays the role of
@@ -36,8 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .commit import batch_committed, mark_committed, scrub_partial
-from .micro_batch import _has_batches
+from .commit import has_batches, run_ledger
 from .revisit import EVENTS, N_URLS_MOD
 
 
@@ -89,7 +85,7 @@ def _batch_delta(batch_df: DataFrame, prev_tail: DataFrame | None) -> DataFrame:
 def _state_tail(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Latest (url_id, last_sk) across all committed delta partitions —
     the sketch that plays lag() at the next batch boundary."""
-    if not _has_batches(state_dir):
+    if not has_batches(state_dir):
         return None
     s = spark.read.parquet(state_dir)
     pick = F.max(F.struct("batch_id", "last_ts", "last_event_id", "last_sk")).alias(
@@ -103,36 +99,14 @@ def _state_tail(spark: SparkSession, state_dir: str) -> DataFrame | None:
 def stream_recrawl_state(spark: SparkSession, events_dir: str, workdir: str) -> None:
     """Drain all available fetch-observation files (trigger availableNow),
     each micro-batch appending its per-URL delta partition. Restartable
-    and idempotent: a replayed batch scrubs and rewrites its own
-    batch_id partition — counters are never double-applied."""
+    and idempotent: counters are never double-applied."""
     state_dir = f"{workdir}/recrawl_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(batch_df, _state_tail(spark, state_dir)).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(EVENTS)
-        .parquet(events_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(EVENTS).parquet(events_dir),
+        f"{workdir}/ckpt",
+        [state_dir],
+        lambda batch_df, k: [_batch_delta(batch_df, _state_tail(spark, state_dir))],
     )
-    q.awaitTermination()
 
 
 def recrawl_schedule(spark: SparkSession, workdir: str, sf_dir: str) -> DataFrame:

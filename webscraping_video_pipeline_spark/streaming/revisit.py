@@ -4,14 +4,10 @@ per-URL change-rate state accumulates batch over batch, so the frontier
 can ask "what is due for re-crawl?" at any point without rescanning the
 full fetch log.
 
-State discipline mirrors ``streaming/corpus.py`` / ``micro_batch.py``
-exactly: the standing state is APPEND-ONLY per-batch DELTA rows
-(url_id, d_fetches, d_changes, last_ts, last_value), partitioned by
-``batch_id`` and written as the batch's ONLY artifact — the partition
-itself is the commit marker, so an at-least-once replay of a
-half-committed batch overwrites its own partition (dynamic overwrite)
-instead of double-counting. The current schedule is a rollup over the
-delta partitions (sum counters, argmax-ts tail), O(urls) rows.
+State: APPEND-ONLY per-batch DELTA rows (url_id, d_fetches, d_changes,
+last_ts, last_value), one ``batch_id`` partition per batch under the
+``streaming/commit.py`` ledger. The current schedule is a rollup over
+the delta partitions (sum counters, argmax-ts tail), O(urls) rows.
 
 Cross-batch change counting: within a batch, changes are counted by the
 same (ts, event_id)-ordered lag as batch q82; at the batch BOUNDARY the
@@ -32,14 +28,11 @@ re-crawl scheduler that replaces that loop at web scale.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .commit import batch_committed, mark_committed, scrub_partial
-from .micro_batch import _has_batches
+from .commit import has_batches, run_ledger
 
 # Mirrors the driver testdata `events` table (fetch-observation source).
 EVENTS = T.StructType(
@@ -98,7 +91,7 @@ def _batch_delta(batch_df: DataFrame, prev_tail: DataFrame | None) -> DataFrame:
 def _state_tail(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Latest (url_id, last_value) across all committed delta partitions —
     the value that plays lag() at the next batch boundary."""
-    if not _has_batches(state_dir):
+    if not has_batches(state_dir):
         return None
     s = spark.read.parquet(state_dir)
     pick = F.max(
@@ -112,36 +105,14 @@ def _state_tail(spark: SparkSession, state_dir: str) -> DataFrame | None:
 def stream_revisit_state(spark: SparkSession, events_dir: str, workdir: str) -> None:
     """Drain all available fetch-observation files (trigger availableNow),
     each micro-batch appending its per-URL delta partition. Restartable
-    and idempotent: a replayed batch rewrites its own batch_id partition
-    (dynamic overwrite) — counters are never double-applied."""
+    and idempotent: counters are never double-applied."""
     state_dir = f"{workdir}/revisit_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(batch_df, _state_tail(spark, state_dir)).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(EVENTS)
-        .parquet(events_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(EVENTS).parquet(events_dir),
+        f"{workdir}/ckpt",
+        [state_dir],
+        lambda batch_df, k: [_batch_delta(batch_df, _state_tail(spark, state_dir))],
     )
-    q.awaitTermination()
 
 
 def revisit_schedule(spark: SparkSession, workdir: str) -> DataFrame:

@@ -12,9 +12,8 @@ State discipline: pure additive counters — each batch appends its own
 batch, pre-aggregated map-side), so stream ≡ batch holds for ANY file
 landing order. The audit table is a rollup over the delta union applying
 q193's exact integer arithmetic, so the streaming verdicts are
-bit-identical to the batch query's. Partitioned by ``batch_id`` with the
-``streaming/commit.py`` marker discipline: replays of a half-committed
-batch scrub and rewrite their own partition instead of double-counting
+bit-identical to the batch query's. The ``streaming/commit.py`` ledger
+keeps a replayed batch from double-counting
 (``tests/test_streaming_skew.py`` pins stream ≡ batch, out-of-order
 equivalence, and replay idempotence).
 
@@ -35,7 +34,7 @@ from ..contract.monitor import (
     _SKEW_PARTS,
     _SKEW_SALTS,
 )
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import run_ledger
 from .takedown import EVENTS
 
 
@@ -77,36 +76,13 @@ def _batch_delta(batch_df: DataFrame) -> DataFrame:
 def stream_skew(spark: SparkSession, events_dir: str, workdir: str) -> None:
     """Drain all available fetch-record files (trigger availableNow),
     each micro-batch appending its counter delta partition. Restartable
-    and idempotent: a replayed batch rewrites its own batch_id
-    partition."""
-    state_dir = f"{workdir}/skew_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(EVENTS)
-        .parquet(events_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    and idempotent."""
+    run_ledger(
+        spark.readStream.schema(EVENTS).parquet(events_dir),
+        f"{workdir}/ckpt",
+        [f"{workdir}/skew_state"],
+        lambda batch_df, k: [_batch_delta(batch_df)],
     )
-    q.awaitTermination()
 
 
 def skew_audit(spark: SparkSession, workdir: str) -> DataFrame:

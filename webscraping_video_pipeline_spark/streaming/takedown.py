@@ -12,11 +12,10 @@ per URL within the batch. Fetch and byte tallies are pure SUMS and the
 distinct-URL census is a COUNT(DISTINCT) over the union of deltas — both
 order-independent, so stream ≡ batch holds for ANY file landing order.
 The state is the PURGED SLICE only (rules are selective by
-construction), not the corpus. Partitioned by ``batch_id`` with the
-``streaming/commit.py`` marker discipline: an at-least-once replay of a
-half-committed batch scrubs and rewrites its own partition instead of
-double-counting (``tests/test_streaming_takedown.py`` pins stream ≡
-batch, out-of-order equivalence, and replay idempotence).
+construction), not the corpus. The ``streaming/commit.py`` ledger keeps
+a replayed batch from double-counting
+(``tests/test_streaming_takedown.py`` pins stream ≡ batch, out-of-order
+equivalence, and replay idempotence).
 
 Reference semantic: the reference applies its allow-list once, at fetch
 time (/root/reference/config.py source registry); a retained corpus
@@ -31,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..contract.monitor import _TD_HOSTS, _TD_PATHS, _TD_PATTERNS
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import run_ledger
 
 # Mirrors the driver testdata `events` table.
 EVENTS = T.StructType(
@@ -78,36 +77,13 @@ def _batch_delta(spark: SparkSession, batch_df: DataFrame) -> DataFrame:
 def stream_takedown(spark: SparkSession, events_dir: str, workdir: str) -> None:
     """Drain all available fetch-record files (trigger availableNow),
     each micro-batch appending its matched-slice delta partition.
-    Restartable and idempotent: a replayed batch rewrites its own
-    batch_id partition."""
-    state_dir = f"{workdir}/takedown_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(spark, batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(EVENTS)
-        .parquet(events_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    Restartable and idempotent."""
+    run_ledger(
+        spark.readStream.schema(EVENTS).parquet(events_dir),
+        f"{workdir}/ckpt",
+        [f"{workdir}/takedown_state"],
+        lambda batch_df, k: [_batch_delta(spark, batch_df)],
     )
-    q.awaitTermination()
 
 
 def takedown_ledger(spark: SparkSession, workdir: str) -> DataFrame:

@@ -4,8 +4,7 @@ vocabulary ledger, so "how fast are NEW words still arriving?" — the
 dictionary/BPE-vocab/term-id capacity signal — is answerable after every
 batch without rescanning the corpus.
 
-State discipline: two batch_id-partitioned ledgers under the
-``streaming/commit.py`` marker discipline —
+State: two sinks under the ``streaming/commit.py`` ledger —
 
 - ``vocab_state``: the words FIRST SEEN in each batch (one row per new
   word). A batch's new words are its distinct words anti-joined against
@@ -13,8 +12,8 @@ State discipline: two batch_id-partitioned ledgers under the
   scrubbed replay recomputes against exactly the state it originally saw
   and the partitions stay a disjoint exact partition of the vocabulary.
 - ``vocab_counts``: one row per batch (docs, tokens, batch-distinct
-  words, new words). The marker lives on this partition — it is the
-  batch's LAST write, so a marker implies both ledgers landed.
+  words, new words). It is the batch's LAST sink, so its marker implies
+  both landed.
 
 New-word counts are NOT order-independent (the first batch to show a
 word owns it) — but cumulative vocabulary IS: any landing order yields
@@ -37,12 +36,10 @@ the crawl lands.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import has_batches, run_ledger
 from .hostprior import DOCS
 
 
@@ -61,73 +58,35 @@ def _batch_tokens(batch_df: DataFrame) -> DataFrame:
 def stream_vocab_state(spark: SparkSession, docs_dir: str, workdir: str) -> None:
     """Drain all available document files (trigger availableNow), each
     micro-batch appending its first-seen-word partition and its tally
-    row. Restartable and idempotent: a replayed batch rewrites its own
-    batch_id partitions (recomputed against strictly-earlier state)."""
+    row. Restartable and idempotent: a replayed batch recomputes against
+    strictly-earlier state."""
     state_dir = f"{workdir}/vocab_state"
-    counts_dir = f"{workdir}/vocab_counts"
 
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        spart = f"{state_dir}/batch_id={bid}"
-        cpart = f"{counts_dir}/batch_id={bid}"
-        if batch_committed(cpart):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(spart, cpart)
+    def delta_fn(batch_df: DataFrame, k: int):
         tok = _batch_tokens(batch_df).localCheckpoint(eager=True)
         bw = tok.select("word").distinct()
-        # strictly-earlier committed partitions (a scrubbed replay of the
-        # first batch leaves state_dir existing but empty — reading it
-        # would fail schema inference, and there is nothing to read)
-        has_prior = os.path.isdir(state_dir) and any(
-            p.startswith("batch_id=") and p != f"batch_id={bid}"
-            for p in os.listdir(state_dir)
-        )
-        if has_prior:
+        if has_batches(state_dir):
             prior = (
                 spark.read.parquet(state_dir)
-                .filter(F.col("batch_id") < bid)
+                .filter(F.col("batch_id") < k)
                 .select("word")
             )
             new = bw.join(prior, "word", "left_anti")
         else:  # first batch: no state yet
             new = bw
-        new = new.localCheckpoint(eager=True)  # counted AND written below
-        n_new = new.count()
-        (
-            new.withColumn("batch_id", F.lit(bid).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        counts = spark.createDataFrame(
-            [
-                (
-                    int(batch_df.count()),
-                    int(tok.count()),
-                    int(bw.count()),
-                    int(n_new),
-                )
-            ],
+        new = new.localCheckpoint(eager=True)  # counted AND written
+        yield new
+        yield spark.createDataFrame(
+            [(batch_df.count(), tok.count(), bw.count(), new.count())],
             "n_docs long, n_tokens long, n_batch_words long, n_new_words long",
-        ).withColumn("batch_id", F.lit(bid).cast("long"))
-        (
-            counts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(counts_dir)
         )
-        mark_committed(cpart)
 
-    q = (
-        spark.readStream.schema(DOCS)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(DOCS).parquet(docs_dir),
+        f"{workdir}/ckpt",
+        [state_dir, f"{workdir}/vocab_counts"],
+        delta_fn,
     )
-    q.awaitTermination()
 
 
 def vocab_growth(spark: SparkSession, workdir: str) -> DataFrame:

@@ -4,13 +4,10 @@ ONLINE, which captures become full payload records and which become
 ~64-byte revisit records — the decision a crawler's archive writer must
 make at ingestion time, against the last stored digest per URL.
 
-State discipline mirrors ``streaming/revisit.py`` exactly: the standing
-state is APPEND-ONLY per-batch DELTA rows (url_id, d_fetches,
-d_revisits, d_raw_bytes, d_stored_bytes, last_ts, last_event_id,
-last_digest), partitioned by ``batch_id`` and written as the batch's
-ONLY artifact — the partition is the commit marker, so an at-least-once
-replay of a half-committed batch rewrites its own partition (dynamic
-overwrite) instead of double-counting bytes. The storage report is a
+State mirrors ``streaming/revisit.py``: APPEND-ONLY per-batch DELTA
+rows (url_id, d_fetches, d_revisits, d_raw_bytes, d_stored_bytes,
+last_ts, last_event_id, last_digest), one ``batch_id`` partition per
+batch under the ``streaming/commit.py`` ledger. The storage report is a
 rollup over the delta partitions, O(urls) rows.
 
 Cross-batch digest carry: within a batch, revisits are marked by the
@@ -30,13 +27,10 @@ practice).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .commit import batch_committed, mark_committed, scrub_partial
-from .micro_batch import _has_batches
+from .commit import has_batches, run_ledger
 from .revisit import EVENTS, N_URLS_MOD
 
 REVISIT_REC_BYTES = 64  # must match contract.ingest._REVISIT_REC_BYTES
@@ -104,7 +98,7 @@ def _batch_delta(batch_df: DataFrame, prev_tail: DataFrame | None) -> DataFrame:
 
 def _state_tail(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Latest (url_id, last_digest) across committed delta partitions."""
-    if not _has_batches(state_dir):
+    if not has_batches(state_dir):
         return None
     s = spark.read.parquet(state_dir)
     pick = F.max(
@@ -118,35 +112,14 @@ def _state_tail(spark: SparkSession, state_dir: str) -> DataFrame | None:
 def stream_warc_revisit(spark: SparkSession, events_dir: str, workdir: str) -> None:
     """Drain all available capture files (trigger availableNow), each
     micro-batch appending its per-URL delta partition. Restartable and
-    idempotent: a replayed batch rewrites its own batch_id partition."""
+    idempotent."""
     state_dir = f"{workdir}/warc_state"
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        part = f"{state_dir}/batch_id={bid}"
-        if batch_committed(part):
-            return  # fully committed already (at-least-once replay)
-        scrub_partial(part)
-        delta = _batch_delta(batch_df, _state_tail(spark, state_dir)).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
-        mark_committed(part)
-
-    q = (
-        spark.readStream.schema(EVENTS)
-        .parquet(events_dir)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_ledger(
+        spark.readStream.schema(EVENTS).parquet(events_dir),
+        f"{workdir}/ckpt",
+        [state_dir],
+        lambda batch_df, k: [_batch_delta(batch_df, _state_tail(spark, state_dir))],
     )
-    q.awaitTermination()
 
 
 def warc_storage_report(spark: SparkSession, workdir: str) -> DataFrame:
