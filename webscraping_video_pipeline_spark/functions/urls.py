@@ -20,7 +20,8 @@ from __future__ import annotations
 import re
 from urllib.parse import parse_qsl, urlencode, urlsplit, urlunsplit
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -76,83 +77,77 @@ def canonicalize_url(url: str | None) -> str | None:
         return url
 
 
-# Vectorized fast-path shape (r6, guide §4.2: hand whole batches to
-# vectorized ops, keep the scalar path for the tail): one regex admits only
-# URLs whose canonicalization is expressible in pandas str ops with BYTE
-# parity to canonicalize_url —
+# Arrow-kernel fast shape: one RE2 pattern admits only URLs whose
+# canonicalization is expressible in pyarrow.compute kernels with BYTE parity
+# to canonicalize_url —
 #   - scheme [A-Za-z][A-Za-z0-9+.-]*   (urlsplit's charset)
-#   - pure-ASCII host [A-Za-z0-9.-]+   (no userinfo/brackets; the idna
-#     fast path in canonicalize_url is a no-op for these)
-#   - optional 1-4 digit port          (always a VALID port, so
-#     urlsplit's .port cannot raise; int() drops leading zeros exactly
-#     like urlsplit's port formatting)
+#   - host [A-Za-z0-9.-]+              (no userinfo/brackets; the idna fast
+#     path in canonicalize_url is a no-op for these)
+#   - optional 1-4 digit port          (always a VALID port, so urlsplit's
+#     .port cannot raise; the int cast drops leading zeros exactly like
+#     urlsplit's port formatting)
 #   - path with no '?'/'#'             (missing -> '/')
-#   - optional query of 1-2 safe k=v segments (the _SAFE_QUERY_RE
-#     alphabet; 2 segments are sorted by (key, value) with a vectorized
-#     tuple compare — >=3 would need a per-row sort, so they fall back)
+#   - optional query of 1-2 safe k=v segments (the _SAFE_QUERY_RE alphabet),
+#     each key and value captured by the pattern itself, so the (key, value)
+#     sort is two element-wise compares and no split or list index is needed;
+#     >=3 segments would need a per-row sort, so they fall back
 #   - optional fragment (dropped)
-# Anything else — and any URL containing tab/CR/LF, which urlsplit strips
-# mid-string — takes the scalar path. Parity is pinned by
-# tests/test_urls.py (fuzz + the fast/slow boundary cases).
-_FAST_URL_RE = re.compile(
-    r"\A([A-Za-z][A-Za-z0-9+.\-]*)://"  # 1 scheme
-    r"([A-Za-z0-9.\-]+)"  # 2 host
-    r"(?::(\d{1,4}))?"  # 3 port
-    r"(/[^?#]*)?"  # 4 path
-    r"(?:\?([A-Za-z0-9_.~\-]+=[A-Za-z0-9_.~\-]*"  # 5 query (1-2 safe k=v)
-    r"(?:&[A-Za-z0-9_.~\-]+=[A-Za-z0-9_.~\-]*)?))?"
-    r"(?:#.*)?\Z",
-    re.S,
+# Every character must be printable ASCII [\x21-\x7E]: the scalar path
+# strip()s Unicode whitespace (\x85, \xa0, \u2028, ...) and urlsplit
+# deletes tab/CR/LF mid-string, and neither can occur inside that range.
+# Anything else, and nulls, takes the scalar path. Parity is pinned by
+# tests/test_urls.py (boundary cases + a Spark-level differential fuzz).
+_DEFAULT_SCHEME_PORTS = pa.array([f"{s}:{p}" for s, p in _DEFAULT_PORTS.items()])
+_SAFE = r"[A-Za-z0-9_.~\-]"
+_FAST_URL_RE2 = (
+    r"^(?P<sch>[A-Za-z][A-Za-z0-9+.\-]*)://"
+    r"(?P<host>[A-Za-z0-9.\-]+)"
+    r"(?::(?P<port>[0-9]{1,4}))?"
+    r"(?P<path>/[\x21\x22\x24-\x3E\x40-\x7E]*)?"
+    rf"(?:\?(?P<q>(?P<k1>{_SAFE}+)=(?P<v1>{_SAFE}*)(?:&(?P<k2>{_SAFE}+)=(?P<v2>{_SAFE}*))?))?"
+    r"(?:#[\x21-\x7E]*)?$"
 )
 
 
-@F.pandas_udf(T.StringType())
-def canonicalize_url_udf(urls: pd.Series) -> pd.Series:
-    import numpy as np
-
-    s = urls.str.strip()
-    ex = s.str.extract(_FAST_URL_RE)
-    fast = ex[0].notna() & ~s.str.contains("[\t\r\n]", regex=True, na=True)
-    if not fast.any():
-        return urls.map(canonicalize_url)
-    out = pd.Series(index=urls.index, dtype=object)
-    f = ex.loc[fast]
-    sch = f[0].str.lower()
-    host = f[1].str.lower()
-    port = pd.to_numeric(f[2], errors="coerce")
-    is_def = ((sch == "http") & (port == 80)) | ((sch == "https") & (port == 443))
-    keep_port = f[2].notna() & ~is_def
-    netloc = host.where(
-        ~keep_port,
-        host + ":" + port.astype("Int64").astype(str),
+@F.arrow_udf(T.StringType())
+def canonicalize_url_udf(urls: pa.Array) -> pa.Array:
+    """:func:`canonicalize_url` over an Arrow batch, byte-identical to it."""
+    m = pc.extract_regex(urls, _FAST_URL_RE2)
+    # one string column per group; an optional group that did not take part
+    # reads "", a row off the shape reads null
+    sch, host, port, path, q, k1, v1, k2, v2 = (
+        pc.struct_field(m, i) for i in range(m.type.num_fields)
     )
-    path = f[3].fillna("/")
-    q = f[4]
-    has_q = q.notna()
-    qfull = pd.Series("", index=q.index, dtype=object)
-    if has_q.any():
-        qq = q[has_q]
-        first = qq.str.partition("&")
-        two = first[1] == "&"
-        seg1, seg2 = first[0], first[2]
-        k1, v1 = seg1.str.partition("=")[0], seg1.str.partition("=")[2]
-        k2, v2 = seg2.str.partition("=")[0], seg2.str.partition("=")[2]
-        # (key, value) tuple order, vectorized — NOT raw segment order
-        # ('=' sorts above digits, so "a=x" vs "a0=y" would flip)
-        in_order = (k1 < k2) | ((k1 == k2) & (v1 <= v2))
-        canon_q = pd.Series(
-            np.where(
-                two,
-                np.where(in_order, seg1 + "&" + seg2, seg2 + "&" + seg1),
-                qq,
-            ),
-            index=qq.index,
-        )
-        qfull[has_q] = "?" + canon_q
-    out[fast] = sch + "://" + netloc + path + qfull
-    slow = ~fast
-    if slow.any():
-        out[slow] = urls[slow].map(canonicalize_url)
+    sch = pc.utf8_lower(sch)
+    port = pc.cast(pc.cast(pc.if_else(pc.equal(port, ""), None, port), pa.int32()), pa.string())
+    drop_port = pc.or_kleene(
+        pc.is_null(port),
+        pc.is_in(pc.binary_join_element_wise(sch, port, ":"), value_set=_DEFAULT_SCHEME_PORTS),
+    )
+    port = pc.if_else(drop_port, "", pc.binary_join_element_wise(":", port, ""))
+    # (key, value) tuple order — NOT raw segment order ('=' sorts above
+    # digits, so "a=x" vs "a0=y" would flip); an absent k2 is "" and never swaps
+    swap = pc.and_(
+        pc.not_equal(k2, ""),
+        pc.or_(pc.less(k2, k1), pc.and_(pc.equal(k1, k2), pc.less(v2, v1))),
+    )
+    q = pc.if_else(swap, pc.binary_join_element_wise(k2, "=", v2, "&", k1, "=", v1, ""), q)
+    out = pc.binary_join_element_wise(
+        sch,
+        "://",
+        pc.utf8_lower(host),
+        port,
+        pc.if_else(pc.equal(path, ""), "/", path),
+        pc.if_else(pc.equal(q, ""), "", "?"),
+        q,
+        "",
+    )
+    # only the rows off the fast shape (and nulls) become Python objects;
+    # their scalar results are scattered back in place
+    slow = pc.is_null(m)
+    if pc.any(slow).as_py():
+        canon = [canonicalize_url(u) for u in urls.filter(slow).to_pylist()]
+        out = pc.replace_with_mask(out, slow, pa.array(canon, pa.string()))
     return out
 
 
@@ -165,16 +160,11 @@ def host_of(url: str | None) -> str | None:
         return None
 
 
-@F.pandas_udf(T.StringType())
-def host_of_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(host_of)
-
-
 def host_col(canon_url: Column) -> Column:
     """Host of an already-canonical URL, JVM-side (no Python round trip).
 
     Safe only on canonical URLs (lowercased host, no userinfo); the general
-    case goes through :func:`host_of_udf`.
+    case goes through :func:`host_of`.
     """
     return F.regexp_extract(canon_url, r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1)
 

@@ -4,7 +4,8 @@ Local mode is the sandbox reality (one JVM, N threads); the config is chosen
 so the same code runs unchanged on a multi-executor cluster:
 
 - AQE on (runtime coalescing + skew-join backstop for mega-hosts),
-- Arrow on (every Python touchpoint is a pandas UDF over Arrow batches),
+- Arrow on (every Python touchpoint is a pandas or Arrow UDF over Arrow
+  batches),
 - UTC session timezone (DuckDB-oracle comparability; parquet timestamps are
   UTC-naive),
 - shuffle partitions sized to cores locally — on a real cluster this should
@@ -76,21 +77,21 @@ def get_spark(
         # lifetime is owned by the caller here, so periodic GC is the
         # lever). 90s keeps the reclaim latency well under one heavy query.
         .config("spark.cleaner.periodicGC.interval", "90s")
-        # GC policy note (r6, measured both ways): System.gc() — called by
-        # periodicGC and by bench round hygiene — is a full STW collection
-        # under G1; a 1-3s pause that occasionally lands on a sub-second
-        # query mid-bench (q30 0.35s isolated vs 1.57s when hit).
-        # -XX:+ExplicitGCInvokesConcurrent removes those pauses BUT the
-        # concurrent cycle then overlaps the NEXT timed frontier round and
-        # cost the north metric 10-30% in an interleaved A/B, so the
-        # default stays the JVM default (synchronous explicit GC, which
-        # the round loop absorbs in its untimed gap). Override via
-        # SPARK_GRAFT_GC_OPTS for query-only batch deployments.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_GC_OPTS", "-XX:+UseG1GC"),
-        )
     )
+    # GC policy note (r6, measured both ways): System.gc() — called by
+    # periodicGC and by bench round hygiene — is a full STW collection
+    # under G1; a 1-3s pause that occasionally lands on a sub-second
+    # query mid-bench (q30 0.35s isolated vs 1.57s when hit).
+    # -XX:+ExplicitGCInvokesConcurrent removes those pauses BUT the
+    # concurrent cycle then overlaps the NEXT timed frontier round and
+    # cost the north metric 10-30% in an interleaved A/B, so the
+    # default stays the JVM default (synchronous explicit GC, which
+    # the round loop absorbs in its untimed gap). JVM options are set only
+    # on request via SPARK_GRAFT_GC_OPTS (e.g. for query-only batch
+    # deployments), so an operator's spark-defaults.conf is not overridden.
+    gc_opts = os.environ.get("SPARK_GRAFT_GC_OPTS")
+    if gc_opts:
+        builder = builder.config("spark.driver.extraJavaOptions", gc_opts)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
